@@ -127,10 +127,13 @@ object Bench {
     // truncates long stdout lines (r10's artifact kept only the tail,
     // "parsed": null), so the machine-readable per-query/per-pass map
     // must survive somewhere length-proof.
-    // default name carries the sf tag so concurrent runs (or runs at
-    // different scales) don't clobber one artifact
+    // default name carries the sf tag, the core count and whether the
+    // machine was shared, so concurrent runs, runs at other scales and
+    // runs on another core count or box never overwrite the committed
+    // canonical artifact (BENCH_FULL_<sf>.json)
     val sfTag = new java.io.File(sfDir).getName
-    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", s"BENCH_FULL_$sfTag.json")
+    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
+      s"BENCH_FULL_${sfTag}_c$cpus${if (isolated) "" else "_shared"}.json")
     try java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
       (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     catch { case e: Throwable => System.err.println(s"[bench] write $outPath: $e") }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.hadoop.fs.{FileSystem, Path}
 import graft.functions.{K, Kernel}
@@ -246,31 +246,39 @@ object FullTextIndex {
                  k1: Double = FullText.K1, b: Double = FullText.B): DataFrame = {
     val maxLength = conf(spark, path)
     reconcile(spark, path)
-    val qTerms = queries.select(col(qIdCol),
-        explode(array_distinct(Kernel.tokenIds(col(qTextCol), maxLength)))
-          .as("token_id"))
-      .localCheckpoint(false)
-    val termIds = qTerms.select(col("token_id")).distinct()
+    // the query batch's terms, tokenized ONCE in a single collect of the
+    // per-query distinct-term lists (batch-bounded: ≤ maxLength terms a
+    // query, the same rows the join below broadcasts anyway) and
+    // exploded on the driver into a local relation: no job for a local
+    // query batch, one narrow job for any other
+    val tids = array_distinct(Kernel.tokenIds(col(qTextCol), maxLength))
+    val terms = queries.select(col(qIdCol), tids).collect().toSeq.flatMap(r =>
+      if (r.isNullAt(1)) Seq.empty else r.getSeq[Long](1).map(t => Row(r.get(0), t)))
+    val qTerms = spark.createDataFrame(java.util.Arrays.asList(terms: _*),
+      queries.select(col(qIdCol), explode(tids).as("token_id")).schema)
+    val ids = terms.map(_.getLong(1)).distinct.sorted
     // batch-bounded term set → IN predicate lands in the parquet scan
     // (row-group skipping on the sorted token column); wide batches keep
-    // the broadcast semi join (corpus side still never shuffles). The
-    // limit+1 collect decides the path without ever pulling an
-    // over-limit term set to the driver
-    val ids = termIds.limit(PushdownTermLimit + 1).collect()
-      .map(_.getLong(0)).sorted
+    // the broadcast semi join (corpus side still never shuffles)
     def prune(t: DataFrame): DataFrame =
       if (ids.length <= PushdownTermLimit) t.filter(col("token_id").isin(ids: _*))
-      else t.join(broadcast(termIds), Seq("token_id"), "left_semi")
-    val post = liveRows(spark, path, prune(spark.read.parquet(s"$path/postings")))
-    val dfNow = prune(spark.read.parquet(s"$path/df"))
+      else t.join(broadcast(qTerms.select(col("token_id")).distinct()), Seq("token_id"),
+        "left_semi")
+    val post = liveRows(spark, path, prune(SidecarIO.readTable(spark, s"$path/postings")))
+    val dfNow = prune(SidecarIO.readTable(spark, s"$path/df"))
       .groupBy(col("token_id")).agg(sum(col("df")).as("df"))
-    val nd = spark.read.parquet(s"$path/meta")
-      .agg(sum(col("n_docs")).as("__n_docs"), sum(col("total_len")).as("__total_len"))
+    // the corpus totals enter as literals summed on the driver from the
+    // meta partials. avgdl divides on the driver — the same IEEE double
+    // division as in-plan, bit for bit — and an empty corpus (no live
+    // row ever reaches the weight) gets null, where a literal 0/0 would
+    // fail constant folding under ANSI
+    val totals = metaTotals(spark, path)
+    val avgdl = for (t <- totals.totalLen; n <- totals.nDocs if n != 0L)
+      yield t.toDouble / n.toDouble
     val weights = post
       .join(broadcast(dfNow), "token_id")
-      .crossJoin(broadcast(nd))
-      .withColumn("__avgdl",
-        col("__total_len").cast("double") / col("__n_docs").cast("double"))
+      .withColumn("__n_docs", totals.nDocs.fold(lit(null).cast("long"))(lit(_)))
+      .withColumn("__avgdl", avgdl.fold(lit(null).cast("double"))(lit(_)))
       .withColumn("weight",
         FullText.idfQ(col("df"), col("__n_docs")) *
           (col("tf").cast("double") * lit(k1 + 1.0)) /
@@ -333,7 +341,7 @@ object FullTextIndex {
       if (idArr.length <= PushdownTermLimit) t.filter(col("doc_id").isin(idArr: _*))
       else t.join(broadcast(drop), Seq("doc_id"), "left_semi")
     val victims = liveRows(spark, path,
-        pruneDocs(spark.read.parquet(s"$path/docs")))
+        pruneDocs(SidecarIO.readTable(spark, s"$path/docs")))
       .localCheckpoint(false)
     // stage EVERYTHING the apply step will do, deltas included, BEFORE
     // touching any live table — after READY the removal is decided and
@@ -399,7 +407,7 @@ object FullTextIndex {
     def rewrite(sub: String, sortCol: String): Unit = {
       val staged = new Path(s"$path/_${sub}_new")
       fs.delete(staged, true)
-      maskBy(spark.read.parquet(s"$path/$sub"), snap)
+      maskBy(SidecarIO.readTable(spark, s"$path/$sub"), snap)
         .repartition(col(sortCol)).sortWithinPartitions(sortCol)
         .write.parquet(staged.toString)
       swapDir(fs, s"$path/$sub", staged.toString)
@@ -411,7 +419,7 @@ object FullTextIndex {
     // stay and keep masking
     val staged = new Path(s"$path/_tombstones_new")
     fs.delete(staged, true)
-    maskBy(spark.read.parquet(s"$path/tombstones"), snap)
+    maskBy(SidecarIO.readTable(spark, s"$path/tombstones"), snap)
       .coalesce(1).write.parquet(staged.toString)
     swapDir(fs, s"$path/tombstones", staged.toString)
   }
@@ -442,8 +450,7 @@ object FullTextIndex {
     if (footerRowCount(spark, fs, s"$path/tombstones") < minTombstones) return false
     val pending = tombstoneMax(spark, path).count()
     if (pending < minTombstones) return false
-    val live = spark.read.parquet(s"$path/meta")
-      .agg(coalesce(sum(col("n_docs")), lit(0L))).collect()(0).getLong(0)
+    val live = metaTotals(spark, path).nDocs.getOrElse(0L)
     if (pending.toDouble < frac * live) return false
     compactPostings(spark, path)
     true
@@ -457,8 +464,7 @@ object FullTextIndex {
     fs.listStatus(new Path(dir))
       .filter(_.getPath.getName.endsWith(".parquet"))
       .map { f =>
-        val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f.getPath, conf))
+        val rd = SidecarIO.open(f.getPath, conf)
         try rd.getRecordCount finally rd.close()
       }.sum
   }
@@ -475,7 +481,7 @@ object FullTextIndex {
     def fold(sub: String, agg: DataFrame => DataFrame): Unit = {
       val staged = new Path(s"$path/_${sub}_new")
       fs.delete(staged, true)
-      agg(spark.read.parquet(s"$path/$sub"))
+      agg(SidecarIO.readTable(spark, s"$path/$sub"))
         .coalesce(1).write.parquet(staged.toString)
       swapDir(fs, s"$path/$sub", staged.toString)
     }
@@ -524,18 +530,32 @@ object FullTextIndex {
     * 0 for an empty index. Appends write gen = this + 1; removals
     * tombstone at gen = this, so re-added versions (strictly higher
     * gen) outlive the mask. */
-  private def maxGen(spark: SparkSession, path: String): Long = {
-    val fs = hfs(spark, path)
-    if (!fs.exists(new Path(s"$path/meta"))) 0L
-    else spark.read.parquet(s"$path/meta")
-      .agg(coalesce(max(col("gen")), lit(0L)).as("g"))
-      .collect()(0).getLong(0)
+  private def maxGen(spark: SparkSession, path: String): Long =
+    metaTotals(spark, path).gen.getOrElse(0L)
+
+  /** The meta partials folded as `sum(n_docs)`, `sum(total_len)`,
+    * `max(gen)` fold them — nulls skipped, None when no value is set (an
+    * empty-batch append's partial has a null `total_len`). Read on the
+    * driver: one row per append or removal since the last
+    * [[recapStats]], needed by every search, append and removal, where
+    * a Spark aggregate would schedule a job each time. */
+  private final case class MetaTotals(nDocs: Option[Long], totalLen: Option[Long],
+                                      gen: Option[Long])
+
+  private def metaTotals(spark: SparkSession, path: String): MetaTotals = {
+    val dir = s"$path/meta"
+    val rows =
+      if (!hfs(spark, path).exists(new Path(dir))) Seq.empty
+      else SidecarIO.readGroups(spark.sparkContext.hadoopConfiguration, dir)
+    def values(f: String) = rows.flatMap(SidecarIO.longOpt(_, f))
+    MetaTotals(values("n_docs").reduceOption(_ + _), values("total_len").reduceOption(_ + _),
+      values("gen").reduceOption(_ max _))
   }
 
   /** The folded tombstone set: one (doc_id, gen=max) row per removed
     * doc — O(removals since compaction), broadcast at the join sites. */
   private def tombstoneMax(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(s"$path/tombstones")
+    SidecarIO.readTable(spark, s"$path/tombstones")
       .groupBy(col("doc_id")).agg(max(col("gen")).as("gen"))
 
   /** Mask `rows` (any table with doc_id + gen columns) against the

@@ -277,23 +277,24 @@ object VectorIndex {
     // floor only ever fires early, and the exact fold decides below
     if (FullTextIndex.footerRowCount(spark, fs, s"$path/tombstones") < minTombstones)
       return false
-    val pending = spark.read.parquet(s"$path/tombstones")
+    val pending = SidecarIO.readTable(spark, s"$path/tombstones")
       .select(col("id")).distinct().count()
     if (pending < minTombstones) return false
     // parquet footer row count — no data pages read
-    val indexed = spark.read.parquet(s"$path/codes").count()
+    val indexed = SidecarIO.readTable(spark, s"$path/codes").count()
     if (pending.toDouble < frac * indexed) return false
     compact(spark, path)
     true
   }
 
   /** Physical compaction: rewrite ONLY the cells that contain tombstoned
-    * rows (found by one narrow join over the codes table — id + m codes
-    * per row, a small fraction of corpus bytes), dropping those rows, then
-    * clear the tombstone set. Each rewritten cell is also re-clustered to
-    * one file, folding the per-[[append]] file growth back down. Cells
-    * without deletes keep their files byte-identical — the rewrite cost is
-    * proportional to the affected cells, never the corpus.
+    * rows (found by one narrow join over the id and cell columns of the
+    * codes and vecs tables, a small fraction of corpus bytes), dropping
+    * those rows, then clear the tombstone set. Each rewritten cell is
+    * also re-clustered to one file, folding the per-[[append]] file
+    * growth back down. Cells without deletes keep their files
+    * byte-identical — the rewrite cost is proportional to the affected
+    * cells, never the corpus.
     *
     * `mergeAll = true` additionally rewrites every cell (file-merge-only
     * compaction for an index that accumulated many appends). */
@@ -324,28 +325,30 @@ object VectorIndex {
     if (!hasTombs && !mergeAll && extraIds.isEmpty) return
     import spark.implicits._
     val pending =
-      if (hasTombs) spark.read.parquet(s"$path/tombstones").select(col("id"))
+      if (hasTombs) SidecarIO.readTable(spark, s"$path/tombstones").select(col("id"))
       else spark.emptyDataset[Long].toDF("id")
     val tombs = extraIds.fold(pending)(e =>
       pending.unionByName(e.select(col("id")))).distinct()
-    val codes = spark.read.parquet(s"$path/codes")
-    // bounded by nCells (the partition-column cardinality), never by data
-    val affected =
-      (if (mergeAll) codes.select(col("cell").cast("long"))
-       else codes.join(tombs, Seq("id")).select(col("cell").cast("long")))
-        .distinct().collect().map(_.getLong(0)).sorted
-    if (affected.nonEmpty) {
-      // the codes and vecs rewrites read disjoint tables — overlap them
-      // (guide §2.6). The affected-cells collect above already
-      // materialized nothing shared; tombs re-evaluates per leg but is
-      // O(deletes). Each leg's stage-then-swap stays self-contained.
-      val vecsDir = new org.apache.hadoop.fs.Path(s"$path/vecs")
-      val legs = Seq(() => rewriteCells(spark, s"$path/codes", affected, tombs)) ++
-        (if (fs.exists(vecsDir))
-          Seq(() => rewriteCells(spark, s"$path/vecs", affected, tombs))
-         else Seq.empty)
-      Par.run(legs)
-    }
+    val tables = Seq(s"$path/codes") ++
+      (if (fs.exists(new org.apache.hadoop.fs.Path(s"$path/vecs"))) Seq(s"$path/vecs")
+       else Seq.empty)
+    // affected cells come from EVERY table, not codes alone: the two
+    // legs below swap independently, so a crash after the codes leg
+    // swapped and before the vecs leg did leaves the deleted ids only in
+    // vecs — a codes-only probe would find nothing, clear the
+    // tombstones, and strand those vecs rows for good. Bounded by nCells
+    // (the partition-column cardinality), never by data.
+    val affected = tables.map { t =>
+        val rows = SidecarIO.readTable(spark, t)
+        (if (mergeAll) rows else rows.join(tombs, Seq("id"))).select(col("cell").cast("long"))
+      }.reduce(_ union _)
+      .distinct().collect().map(_.getLong(0)).sorted
+    // the codes and vecs rewrites read disjoint tables — overlap them
+    // (guide §2.6). The affected-cells collect above already
+    // materialized nothing shared; tombs re-evaluates per leg but is
+    // O(deletes). Each leg's stage-then-swap stays self-contained.
+    if (affected.nonEmpty)
+      Par.run(tables.map(t => () => rewriteCells(spark, t, affected, tombs)))
     if (hasTombs) fs.delete(tombDir, true)
   }
 
@@ -370,7 +373,7 @@ object VectorIndex {
                            cells: Array[Long], tombs: DataFrame): Unit = {
     val tmpPath = s"${tablePath}_compact"
     val oldPath = s"${tablePath}_old"
-    spark.read.parquet(tablePath)
+    SidecarIO.readTable(spark, tablePath)
       .filter(col("cell").isin(cells: _*))
       .join(tombs, Seq("id"), "left_anti")
       .withColumn("cell", col("cell").cast("long"))
@@ -484,9 +487,9 @@ object VectorIndex {
     reconcile(fs, s"$path/vecs")
     def opt(sub: String): Option[DataFrame] =
       if (fs.exists(new org.apache.hadoop.fs.Path(s"$path/$sub")))
-        Some(spark.read.parquet(s"$path/$sub"))
+        Some(SidecarIO.readTable(spark, s"$path/$sub"))
       else None
-    Loaded(cents, books, spark.read.parquet(s"$path/codes"),
+    Loaded(cents, books, SidecarIO.readTable(spark, s"$path/codes"),
       opt("vecs"), opt("tombstones"), residual = isResidual(spark, path))
   }
 
@@ -807,17 +810,22 @@ object VectorIndex {
     // — residual layouts — the query expressed in the PROBED cell's
     // residual frame, computed HERE (|Q|·nProbe rows, before the
     // broadcast), never per candidate inside the hot ADC scan
-    val probes = queries.withColumn("cell",
-        explode(bridge.column(graft.functions.ProbeCells(
-          bridge.expression(col(qVecCol)), bank, np))))
+    val probeCells = bridge.column(graft.functions.ProbeCells(
+      bridge.expression(col(qVecCol)), bank, np))
+    val probes = queries.withColumn("cell", explode(probeCells))
       .withColumn("__qd",
         if (idx.residual) bridge.column(graft.functions.ResidualVec(
           bridge.expression(col(qVecCol)), bridge.expression(col("cell")), bank))
         else col(qVecCol))
       .select(col(qIdCol), col("__qd"), col("cell"))
-    // union of probed cells: bounded by nCells (bank-sized), never by data
-    val probedCells = probes.select(col("cell")).distinct()
-      .collect().map(_.getLong(0)).sorted
+    // union of probed cells, decided on the driver from ONE collect of
+    // the per-query probe lists: |Q|·nProbe longs, a fraction of the
+    // probes frame the join broadcasts anyway. No job for a local query
+    // batch (the projection folds into the local relation), one narrow
+    // job for any other
+    val probedCells = queries.select(probeCells).collect()
+      .flatMap(r => if (r.isNullAt(0)) Seq.empty else r.getSeq[Long](0))
+      .distinct.sorted
 
     // IN on the partition column only → evaluated against the cached
     // partition spec at planning time; unprobed cell directories never
@@ -960,7 +968,7 @@ object VectorIndex {
     * bounded by the layout, never by data. */
   def stats(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
-    val codes = spark.read.parquet(s"$path/codes")
+    val codes = SidecarIO.readTable(spark, s"$path/codes")
     val occ = codes.groupBy(col("cell")).agg(count(lit(1)).as("n"))
       .agg(count(lit(1)).as("n_cells"), sum(col("n")).as("n_rows"),
         min(col("n")).as("min_occupancy"),
@@ -971,7 +979,7 @@ object VectorIndex {
     val tombDir = new org.apache.hadoop.fs.Path(s"$path/tombstones")
     val nTombs =
       if (fs.exists(tombDir))
-        spark.read.parquet(s"$path/tombstones").select(col("id")).distinct().count()
+        SidecarIO.readTable(spark, s"$path/tombstones").select(col("id")).distinct().count()
       else 0L
     val cellDirs = fs.listStatus(new org.apache.hadoop.fs.Path(s"$path/codes"))
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("cell="))

@@ -14,6 +14,12 @@ object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
+  /** `StructType.asNullable` is `private[spark]`; a file-source read
+    * makes every column nullable with it, so a schema taken from a
+    * parquet footer must too to equal the inferred one. */
+  def asNullable(s: org.apache.spark.sql.types.StructType): org.apache.spark.sql.types.StructType =
+    s.asNullable
+
   /** `AbstractDataType`/`TypeCollection` are `private[sql]` in Spark 4,
     * but they are the only way ExpectsInputTypes can declare "array of
     * float OR double" — re-exported here so the native expressions can

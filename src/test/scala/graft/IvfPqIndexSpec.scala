@@ -409,6 +409,37 @@ class IvfPqIndexSpec extends AnyFunSuite with SparkSessionTestWrapper {
     assert(afterCompact.filter(col("id") % 9 === 0).count() == 0L)
   }
 
+  test("compact recovers a crash between its codes and vecs legs: no stale vecs rows survive") {
+    // the state a compaction leaves when it dies after the codes leg
+    // swapped and before the vecs leg did — codes compacted, vecs and
+    // tombstones not — built directly: B is A's twin, compacted whole,
+    // and B's codes replace A's
+    val pA = tmp("graft_ivfpq_legsA")
+    val pB = tmp("graft_ivfpq_legsB")
+    val gone = e.filter(col("vec_id") % 9 === 0).select(col("vec_id"))
+    Seq(pA, pB).foreach { p =>
+      VectorIndex.writeIvfPq(e, "vec_id", "embedding", 16, 8, 16, p, storeVectors = true)
+      VectorIndex.delete(spark, p, gone, "vec_id", autoCompact = false)
+    }
+    VectorIndex.compact(spark, pB)
+    val hconf = spark.sparkContext.hadoopConfiguration
+    val fs = new org.apache.hadoop.fs.Path(pA).getFileSystem(hconf)
+    fs.delete(new org.apache.hadoop.fs.Path(s"$pA/codes"), true)
+    org.apache.hadoop.fs.FileUtil.copy(fs, new org.apache.hadoop.fs.Path(s"$pB/codes"), fs,
+      new org.apache.hadoop.fs.Path(s"$pA/codes"), false, hconf)
+    VectorIndex.compact(spark, pA)
+    val stale = spark.read.parquet(s"$pA/vecs").filter(col("id") % 9 === 0).count()
+    assert(stale == 0L, s"$stale deleted ids kept vecs rows")
+    // a re-ingested deleted id serves exactly once
+    val back = e.filter(col("vec_id") === 9L)
+    VectorIndex.upsert(back, "vec_id", "embedding", pA)
+    val hits = VectorIndex.searchRescored(spark,
+        back.select(col("vec_id").as("qid"), col("embedding").as("qv")), "qid", "qv",
+        VectorIndex.load(spark, pA), nProbe = 16, k = 5)
+      .collect().map(_.getLong(1))
+    assert(hits.count(_ == 9L) == 1, hits.mkString(","))
+  }
+
   test("writeWith refuses an empty corpus and a zero drift baseline loudly") {
     val pSrc = tmp("graft_ivfpq_guard_src")
     VectorIndex.writeIvfPq(e, "vec_id", "embedding", 16, 8, 16, pSrc)

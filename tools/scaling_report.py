@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Builds the SCALING.md ratio table from two bench artifacts.
 
-Usage: python3 tools/scaling_report.py BENCH_FULL_sf0.1.json BENCH_FULL_testdata_sf1.json
+Usage: python3 tools/scaling_report.py BENCH_FULL_sf0.1_c32.json BENCH_FULL_testdata_sf1_c32.json
 Prints a markdown table of per-query median seconds and the sf1/sf0.1
 ratio, sorted by ratio descending, plus summary stats. The data grows
 10x between the two artifacts, so ~10x is the linear-work expectation
