@@ -118,9 +118,8 @@ object Graft {
   }
 
   /** The scale-tuned local session builder shared by the measurement
-    * mains (Bench, ScaleProbe, StreamProbe — previously three copies of
-    * this block): `local[cpus]`, cores-sized shuffle partitions with
-    * AQE on, the data-GATED hash-agg fallback threshold
+    * mains (Bench, StreamProbe and the other probe mains):
+    * `local[cpus]`, cores-sized shuffle partitions with AQE on, the data-GATED hash-agg fallback threshold
     * ([[fallbackThresholdFor]] — Spark's default below 64 MB of input,
     * the calibrated 128k above; see the Bench scaladoc and
     * [[tuneForScale]] for the two-sided measurements), a data-sized

@@ -62,7 +62,7 @@ object IndexProbe {
         val t0 = System.nanoTime()
         body
         val sec = (System.nanoTime() - t0) / 1e9
-        // untimed purge between reps (ScaleProbe's protocol): release
+        // untimed purge between reps: release
         // dereferenced lineage/shuffle state so rep N+1 doesn't pay it
         System.gc()
         Thread.sleep(1000)

@@ -1249,8 +1249,10 @@ object SparkEntry {
     // plan; the CC labels sit behind a lazy checkpoint so capPerKey's
     // two references materialize the clustering once
     "q108_cluster_balanced" -> ((s, dir) =>
-      Similarity.clusterBalancedSample(tbl(s, dir, "embeddings"), "vec_id", "embedding",
-        4, maxPerCluster = 8, iterations = 12)
+      Sampling.capPerKey(
+        Similarity.semanticClusters(tbl(s, dir, "embeddings"), "vec_id", "embedding", 4,
+          iterations = 12),
+        "cluster", "id", 8)
         .select(col("id"), col("cluster"))),
 
     // the q107 labeling on the ANN scale path: candidates from the
@@ -1284,28 +1286,36 @@ object SparkEntry {
     // hardcodes the q116 chain at nPlanes 1 and any other choice
     // hash-mismatches. (The 0-plane ≡ brute small-corpus degradation
     // is spec-gated.)
-    "q121_semantic_clusters_auto" -> ((s, dir) =>
-      Similarity.semanticClustersAnnAuto(tbl(s, dir, "embeddings"), "vec_id", "embedding",
-        K.Dim, k = 4, iterations = 12)
-        .select(col("id"), col("cluster"))),
+    "q121_semantic_clusters_auto" -> ((s, dir) => {
+      val e = tbl(s, dir, "embeddings")
+      Similarity.semanticClustersAnn(e, "vec_id", "embedding",
+        K.Dim, nPlanes = Similarity.nPlanesFor(e.count()), k = 4, iterations = 12)
+        .select(col("id"), col("cluster"))
+    }),
 
     // q108's topic-balanced cap composed over the q116 ANN labels —
     // bucketed candidates (no corpus broadcast) feed the same CC rounds
     // and id-hash lottery: the balanced-curation shape at 100 TB;
     // q108 stays the exact brute-kNN baseline
     "q119_cluster_balanced_ann" -> ((s, dir) =>
-      Similarity.clusterBalancedSampleAnn(tbl(s, dir, "embeddings"), "vec_id", "embedding",
-        K.Dim, nPlanes = 4, k = 4, maxPerCluster = 8, iterations = 12)
+      Sampling.capPerKey(
+        Similarity.semanticClustersAnn(tbl(s, dir, "embeddings"), "vec_id", "embedding",
+          K.Dim, nPlanes = 4, k = 4, iterations = 12),
+        "cluster", "id", 8)
         .select(col("id"), col("cluster"))),
 
     // the balanced sampler on the q121 auto-sized path: nPlanesFor picks
     // the plane count (1 at the sf0.01 gate corpus — the oracle hardcodes
     // the q119 chain at nPlanes 1, so any other sizing hash-mismatches);
     // q119 stays the fixed-constant contrast, q108 the exact baseline
-    "q122_cluster_balanced_auto" -> ((s, dir) =>
-      Similarity.clusterBalancedSampleAnnAuto(tbl(s, dir, "embeddings"), "vec_id", "embedding",
-        K.Dim, k = 4, maxPerCluster = 8, iterations = 12)
-        .select(col("id"), col("cluster"))),
+    "q122_cluster_balanced_auto" -> ((s, dir) => {
+      val e = tbl(s, dir, "embeddings")
+      Sampling.capPerKey(
+        Similarity.semanticClustersAnn(e, "vec_id", "embedding",
+          K.Dim, nPlanes = Similarity.nPlanesFor(e.count()), k = 4, iterations = 12),
+        "cluster", "id", 8)
+        .select(col("id"), col("cluster"))
+    }),
 
     // DSIR importance masses: hashed word-bigram features, add-one-
     // smoothed target/source bucket counts as exact integer per-doc

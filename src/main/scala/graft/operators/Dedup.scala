@@ -379,11 +379,7 @@ object Dedup {
     * rides the aggregate that builds the node set anyway) is worth one
     * whole barrier. */
   def duplicateClusters(pairs: DataFrame,
-                        iterations: Int = DefaultClusterIterations,
-                        checkpointEvery: Int = 1): DataFrame = {
-    require(checkpointEvery > 0,
-      s"checkpointEvery must be positive (got $checkpointEvery); lineage must be cut " +
-        "periodically or the per-round plan tree grows exponentially")
+                        iterations: Int = DefaultClusterIterations): DataFrame = {
     // localCheckpoint per round: labels is referenced three times per
     // round, so without a LINEAGE cut every round multiplies the
     // logical plan — exponentially many copies of the pair-graph
@@ -399,7 +395,7 @@ object Dedup {
     val edgeSize = edges.queryExecution.optimizedPlan.stats.sizeInBytes
     var labels = edges.groupBy(col("s")).agg(min(col("d")).as("__mn"))
       .select(col("s").as("id"), least(col("s"), col("__mn")).as("cluster"))
-    for (i <- 1 to iterations) {
+    for (_ <- 1 to iterations) {
       val probe = edges.select(col("s").as("key"), col("d").as("out"))
         .union(labels.select(col("cluster").as("key"), col("id").as("out")))
       val looked = probe.join(labels, probe("key") === labels("id"))
@@ -412,14 +408,13 @@ object Dedup {
       // checkpoint blocks still materialize once despite the three
       // references per round. Eager checkpoints here cost a scheduled
       // job per round, which dominated wall time on small label tables.
-      // `checkpointEvery` trades plan-tree growth against cut count.
-      // The r19 A/B settled it: since the cuts are lazy (blocks
-      // materialize inside the final action, no scheduled round jobs),
-      // an uncut round saves nothing and its 3 label references
-      // re-derive the round plan — every-round cuts measured 0.70–0.85×
-      // of every-2 on the 12-round clustering gates, and every-4 ran
-      // 1.25–1.66× (OPTIMIZATION_r19.md). All callers now use the
-      // default 1; labels are identical at any cadence.
+      // Every round is cut: since the cuts are lazy (blocks materialize
+      // inside the final action, no scheduled round jobs), an uncut
+      // round saves nothing and its 3 label references re-derive the
+      // round plan — the r19 A/B measured every-round cuts at
+      // 0.70–0.85× of every-2 on the 12-round clustering gates, and
+      // every-4 at 1.25–1.66× (OPTIMIZATION_r19.md); labels are
+      // identical at any cadence.
       // replaceOriginStats: the cut snapshots the round plan's
       // Statistics, and this loop's self-join SQUARES sizeInBytes every
       // round — a BigInt whose bit length doubles per cut (measured:
@@ -430,80 +425,8 @@ object Dedup {
       // it (labels ≤ the doubled edge list's endpoints, so a small
       // graph keeps its broadcast round joins and a 100 TB one keeps
       // shuffling) while the estimate no longer compounds.
-      if (i % checkpointEvery == 0 || i == iterations)
-        labels = org.apache.spark.sql.graftbridge.Bridge
-          .replaceOriginStats(labels.localCheckpoint(false), Some(edgeSize))
-    }
-    labels
-  }
-
-  /** [[duplicateClusters]] run TO THE FIXPOINT with early exit — the
-    * production form when the round count, not per-round volume, is
-    * the latency floor (each round is a cluster-wide barrier; the
-    * gated queries burn a fixed 12 so the DuckDB oracle can mirror
-    * them, which overshoots graphs that converge in 6 and would
-    * under-shoot a pathological one). Convergence is detected from the
-    * label-sum invariant: every node's label is non-increasing round
-    * over round (it is a min over candidate sets that include the
-    * current label), so the label SUM strictly decreases until — and
-    * only until — the fixpoint; an unchanged sum between two checks
-    * means no node moved in between, i.e. both checkpoints already ARE
-    * the fixpoint. The sum is taken as decimal(38,0), exact for any
-    * realistic id space, so equality is never an overflow artifact.
-    *
-    * Each check rides an EAGER localCheckpoint (the periodic lineage
-    * cut the loop needs anyway) plus one count-star-sized aggregate of
-    * the label table — per check, one extra tiny job on the critical
-    * path, bought against `checkEvery` whole barrier rounds skipped
-    * once converged. The result is still a pure function of the input:
-    * the fixpoint is unique (it does not depend on when the loop
-    * detects it), and equals [[duplicateClusters]] at any sufficient
-    * iteration budget — spec-gated on the chain fixture and the real
-    * ANN graph. `maxIterations` (default 64: pointer doubling closes
-    * 2^64-hop chains — any graph) only bounds the pathological case. */
-  def duplicateClustersConverged(pairs: DataFrame,
-                                 maxIterations: Int = 64,
-                                 checkEvery: Int = 3): DataFrame = {
-    require(maxIterations >= 1 && checkEvery >= 1,
-      s"need maxIterations >= 1 and checkEvery >= 1 (got $maxIterations, $checkEvery)")
-    val edges = pairs.select(col("id_a").as("s"), col("id_b").as("d"))
-      .union(pairs.select(col("id_b").as("s"), col("id_a").as("d")))
-      .localCheckpoint()
-    // constant stats estimate for the label cuts (see duplicateClusters)
-    val edgeSize = edges.queryExecution.optimizedPlan.stats.sizeInBytes
-    var labels = edges.groupBy(col("s")).agg(min(col("d")).as("__mn"))
-      .select(col("s").as("id"), least(col("s"), col("__mn")).as("cluster"))
-    var prevSum: Option[java.math.BigDecimal] = None
-    var i = 1
-    var converged = false
-    while (i <= maxIterations && !converged) {
-      val probe = edges.select(col("s").as("key"), col("d").as("out"))
-        .union(labels.select(col("cluster").as("key"), col("id").as("out")))
-      val looked = probe.join(labels, probe("key") === labels("id"))
-        .select(col("out").as("id"), col("cluster"))
-      labels = labels.union(looked)
-        .groupBy(col("id")).agg(min(col("cluster")).as("cluster"))
-      if (i % checkEvery == 0 || i == maxIterations) {
-        // eager: materialize once, agg reads blocks; replaceOriginStats
-        // as in [[duplicateClusters]] — without it the self-join stats
-        // double per cut and a deep graph overflows BigInteger
-        labels = org.apache.spark.sql.graftbridge.Bridge
-          .replaceOriginStats(labels.localCheckpoint(), Some(edgeSize))
-        val s = Option(labels
-          .agg(sum(col("cluster").cast(org.apache.spark.sql.types.DecimalType(38, 0))))
-          .head().getDecimal(0))
-        // compareTo, not equals: BigDecimal.equals is scale-sensitive
-        // (1E+2 != 100). Both sides come from the same decimal(38,0)
-        // agg today, so scales match — but numeric equality keeps the
-        // invariant robust to any future cast change.
-        val same = (prevSum, s) match {
-          case (Some(p), Some(c)) => p.compareTo(c) == 0
-          case (None, None)       => true
-          case _                  => false
-        }
-        if (same) converged = true else prevSum = s
-      }
-      i += 1
+      labels = org.apache.spark.sql.graftbridge.Bridge
+        .replaceOriginStats(labels.localCheckpoint(false), Some(edgeSize))
     }
     labels
   }

@@ -30,10 +30,11 @@ import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StructField,
   *   - '''BM25 meta partials''': one row per append or removal, summed
   *     on the driver through [[readGroups]] — O(appends + removals since
   *     the last `recapStats`), never corpus-sized.
-  *   - '''data tables''' (codes, vecs, postings, docs, df, tombstones):
-  *     only their SCHEMA comes from a footer ([[readTable]]: one part
-  *     file's footer instead of Spark's schema-inference job); the scan
-  *     itself stays in Spark, where pruning and parallelism matter. */
+  *   - '''data tables''' (codes, vecs, postings, docs, df, tombstones,
+  *     sketch cells): only their SCHEMA comes from a footer
+  *     ([[readTable]]: one part file's footer instead of Spark's
+  *     schema-inference job); the scan itself stays in Spark, where
+  *     pruning and parallelism matter. */
 object SidecarIO {
 
   /** The footer key under which every Spark parquet write stores the

@@ -96,11 +96,6 @@ object Similarity {
       .reduce(_ + _)
   }
 
-  /** ANN via sign-LSH: queries only compare against corpus rows in the same
-    * bucket — the scale path for similarity search (candidate set shrinks
-    * ~2^nPlanes-fold; bucket join is a hash join on the bucket id instead
-    * of a cross join). Recall is traded for throughput; the brute-force
-    * `knnJoin` stays the exact baseline. */
   /** ColBERT MaxSim late-interaction score between two multi-vector
     * columns: Σ_q max_d q·d ([[graft.functions.MaxSim]]) — ranking over
     * per-token vectors without pooling them away. Per-row and narrow;
@@ -752,76 +747,80 @@ object Similarity {
       .select(col(qIdCol), col(cIdCol), col("rank"), col("score"))
   }
 
-  /** Mutual-kNN edges over an embedding column: (id_a < id_b) pairs
-    * where EACH endpoint ranks in the other's top-`k` non-self
-    * neighbors (top-(k+1) ranks with the self match dropped — an exact
-    * duplicate outranking self just adds one more edge inside its own
-    * cluster). The mutuality filter is what keeps hub vectors from
-    * gluing unrelated regions together — a one-directional kNN edge
-    * through a hub is NOT enough to merge clusters.
-    *
-    * Scale shape: one kNN pass (partial top-k agg — ≤ k+1 rows per
-    * vector pre-shuffle), then the transpose self-join on the (qid,
-    * nid) pair key — both sides are the same n·(k+1)-row frame (lazy
-    * lineage cut, materialized once), so the join is hash-equi on a
-    * composite key, never a corpus cross join. The brute kNN is the
-    * exact baseline; [[annLshJoin]]-style candidates slot into
-    * [[semanticClustersFromKnn]] as the 100 TB path. */
-  def mutualKnnPairs(vecs: DataFrame, idCol: String, vecCol: String,
-                     k: Int): DataFrame = {
-    val knn = knnJoin(
+  /** Auto-size `nPlanes` for [[semanticClustersAnn]]: the smallest plane
+    * count with 2^nPlanes ≥ n / targetBucket, i.e. expected bucket
+    * occupancy ≤ targetBucket, so the bucket self-join's Σ|bucket|² term
+    * stays ≈ n·targetBucket (linear in n) instead of n²/2^nPlanes
+    * blowing up when a caller carries a small-corpus constant to a
+    * bigger corpus (SCALING.md measures that failure: a fixed
+    * nPlanes=4 grows ~quadratically, 61 s at 30× vs 9 s auto-sized).
+    * Callers size their planes with it —
+    * `semanticClustersAnn(vecs, …, nPlanesFor(vecs.count()), k)`, as
+    * the q121/q122 gates do — paying one count-star job against a
+    * candidate pass that is already O(n). A corpus of ≤ targetBucket
+    * rows gets 0 planes = one bucket = the exact brute candidate set.
+    * Clamped to [0, 62] (the bucket id is a Long bitmask). */
+  def nPlanesFor(n: Long, targetBucket: Long = 256L): Int = {
+    require(n >= 0 && targetBucket >= 1, "need n >= 0 and targetBucket >= 1")
+    var p = 0
+    while (p < 62 && (n >> p) > targetBucket) p += 1
+    p
+  }
+
+  /** Recommended probe count for a [[nPlanesFor]]-sized plane count,
+    * passed as [[semanticClustersAnn]]'s `probes`. Under the
+    * random-hyperplane model a near pair at angle θ shares all buckets
+    * with probability (1−θ/π)^nPlanes, so every plane the sizing rule
+    * ADDS as the corpus grows costs recall multiplicatively; probing the
+    * 1-flip buckets of the first `p` planes adds back the pairs split by
+    * exactly one probed plane — worth p·(θ/π)·(1−θ/π)^(nPlanes−1), i.e.
+    * the recovery grows linearly in p while candidate cost grows as
+    * (p+1)·n·targetBucket — still linear in n. Measured on planted
+    * cos ≈ 0.95 pairs at 7 auto-sized planes (SCALING.md, "The recall
+    * side of plane growth"):
+    * the model predicts 47.4% same-bucket / 63% at 3 probes / 85% at 7;
+    * measured 48.4% / 62.5% / 82.2%. Probing HALF the planes keeps the
+    * recovered first-order term growing with the plane count at a
+    * bounded constant-factor cost. This is a RECOMMENDATION, not the
+    * default: the gated q121/q122 run probes=0 because their DuckDB
+    * oracles mirror the exact candidate set. */
+  def probesFor(nPlanes: Int): Int = {
+    require(nPlanes >= 0, "need nPlanes >= 0")
+    nPlanes / 2
+  }
+
+  /** The exact candidate source of [[semanticClusters]]: each vector's
+    * top-(k+1) neighbours by cosine over the whole corpus as (qid, nid),
+    * self dropped — one [[knnJoin]] pass (the corpus is the broadcast
+    * query side, partial top-k agg: ≤ k+1 rows per vector
+    * pre-shuffle). */
+  private[graft] def knnCandidates(vecs: DataFrame, idCol: String, vecCol: String,
+                                   k: Int): DataFrame =
+    knnJoin(
       vecs.select(col(idCol).cast("long").as("__qid"), col(vecCol).as("__qv")),
       "__qid", "__qv", vecs, idCol, vecCol, k + 1)
       .select(col("__qid").as("qid"), col(idCol).cast("long").as("nid"))
       .filter(col("qid") =!= col("nid"))
-      .localCheckpoint(false)
-    knn.as("x").join(knn.as("y"),
-        col("x.qid") === col("y.nid") && col("x.nid") === col("y.qid"))
-      .filter(col("x.qid") < col("x.nid"))
-      .select(col("x.qid").as("id_a"), col("x.nid").as("id_b"))
-  }
 
-  /** Mutual-kNN edges from sign-LSH-bucketed candidates — the 100 TB
-    * path of [[mutualKnnPairs]]: the corpus NEVER broadcasts. Bucket
-    * assignment is narrow; the candidate pass is a hash-equi SELF-JOIN
-    * on the bucket key (both sides shuffle on the bucket — co-located,
-    * no driver or broadcast copy of the corpus), and ranking is the
-    * same partial top-k aggregate as [[knnJoin]] (≤ k+1 rows per
-    * vector per map task reach the exchange). Each vector ranks only
-    * its own bucket's members ([[annLshJoin]]'s candidate rule), so a
-    * cross-bucket near pair is missed — the standard LSH recall trade;
-    * more planes shrink buckets, fewer planes raise recall. The mutual
-    * transpose join then runs over the same n·(k+1)-row frame as the
-    * brute path. Reference seed: /root/reference/src/similarity.rs:31-40
-    * (top-k by score with original-order ties). */
-  def mutualAnnPairs(vecs: DataFrame, idCol: String, vecCol: String,
-                     dim: Int, nPlanes: Int, k: Int,
-                     probes: Int = 0, salt: Int = 1): DataFrame = {
-    val knn = annBucketKnn(vecs, idCol, vecCol, dim, nPlanes, k, probes, salt)
-      .localCheckpoint(false)
-    knn.as("x").join(knn.as("y"),
-        col("x.qid") === col("y.nid") && col("x.nid") === col("y.qid"))
-      .filter(col("x.qid") < col("x.nid"))
-      .select(col("x.qid").as("id_a"), col("x.nid").as("id_b"))
-  }
-
-  /** The ANN candidate pass of [[mutualAnnPairs]]: top-(k+1) bucket
-    * mates per vector (self included) as (qid, nid) with self dropped.
-    * Exposed pre-checkpoint so plan audits can see the join shape.
+  /** The sign-LSH candidate source of [[semanticClustersAnn]]: top-(k+1)
+    * bucket mates per vector (self included) as (qid, nid) with self
+    * dropped — the corpus NEVER broadcasts. Bucket assignment is
+    * narrow; the candidate pass is a hash-equi SELF-JOIN on the bucket
+    * key (both sides shuffle on the bucket), and ranking is the same
+    * partial top-k aggregate as [[knnJoin]]. Each vector ranks only its
+    * own bucket's members ([[annLshJoin]]'s candidate rule), so a
+    * cross-bucket near pair is missed — the standard LSH recall trade.
     *
     * Cost model: the bucket self-join scores Σ_b |bucket_b|² pairs, so
-    * `nPlanes` must GROW with the corpus — pick it so 2^nPlanes ≈
-    * n / target_bucket_size (the gated nPlanes=4 is sized for the sf
-    * test corpora, not a constant). Growing nPlanes costs recall
-    * (cross-bucket near pairs are missed); `probes` buys it back:
-    * each vector ALSO probes, as the QUERY side only, the buckets at
-    * Hamming distance 1 on its first `probes` planes (the q17b
-    * multi-probe rule) — the 1-flip relation is symmetric, so the
-    * downstream mutuality filter is unchanged in meaning. Candidate
-    * cost becomes (probes+1)·Σ_b |b_q||b_c| over adjacent bucket
-    * pairs instead of one quadratic term per bucket, and the bucket
-    * population stays 2^nPlanes-way split — more planes + probes is
-    * strictly finer-grained than fewer planes.
+    * `nPlanes` must GROW with the corpus ([[nPlanesFor]]; the gated
+    * nPlanes=4 is sized for the sf test corpora, not a constant).
+    * Growing nPlanes costs recall (cross-bucket near pairs are missed);
+    * `probes` buys it back: each vector ALSO probes, as the QUERY side
+    * only, the buckets at Hamming distance 1 on its first `probes`
+    * planes (the q17b multi-probe rule) — the 1-flip relation is
+    * symmetric, so the downstream mutuality filter is unchanged in
+    * meaning. Candidate cost becomes (probes+1)·Σ_b |b_q||b_c| over
+    * adjacent bucket pairs instead of one quadratic term per bucket.
     *
     * `salt` addresses SKEW, not total cost: the candidate side of a
     * hot bucket splits into `salt` deterministic sub-groups (id-hash)
@@ -830,48 +829,6 @@ object Similarity {
     * spreads over `salt`× more tasks. Each (q, c) pair still meets
     * exactly once (c holds one salt; q covers all), so the result is
     * salt-INVARIANT — a physical-parallelism knob, asserted by spec. */
-  /** Auto-size `nPlanes` from the cost-model rule above: the smallest
-    * plane count with 2^nPlanes ≥ n / targetBucket, i.e. expected
-    * bucket occupancy ≤ targetBucket, so the bucket self-join's
-    * Σ|bucket|² term stays ≈ n·targetBucket (linear in n) instead of
-    * n²/2^nPlanes blowing up when a caller carries a small-corpus
-    * constant to a bigger corpus. Clamped to [0, 62] (the bucket id is
-    * a Long bitmask). Callers that know `n` only as a DataFrame can
-    * pass `df.count()` — one cheap count-star job against an index
-    * build that is already O(n). */
-  def nPlanesFor(n: Long, targetBucket: Long = 256L): Int = {
-    require(n >= 0 && targetBucket >= 1, "need n >= 0 and targetBucket >= 1")
-    var p = 0
-    while (p < 62 && (n >> p) > targetBucket) p += 1
-    p
-  }
-
-  /** Recommended probe count for an auto-sized plane count — the
-    * recall companion to [[nPlanesFor]]. Under the random-hyperplane
-    * model a near pair at angle θ shares all buckets with probability
-    * (1−θ/π)^nPlanes, so every plane the auto-sizer ADDS as the corpus
-    * grows costs recall multiplicatively; probing the 1-flip buckets
-    * of the first `p` planes adds back the pairs split by exactly one
-    * probed plane — worth p·(θ/π)·(1−θ/π)^(nPlanes−1), i.e. the
-    * recovery grows linearly in p while candidate cost grows as
-    * (p+1)·n·targetBucket — still linear in n (ScaleProbe's
-    * fixed_q120/auto_q120 legs exercise the probed composition
-    * end-to-end at every scale point). MEASUREMENT-BACKED
-    * (RecallProbe, planted cos ≈ 0.95 pairs at 7 auto planes): the
-    * model predicts 47.4% same-bucket / 63% at 3 probes / 85% at 7;
-    * measured 48.4% / 62.5% / 82.2%.
-    * Probing HALF the planes keeps the recovered first-order term
-    * growing with the plane count at a bounded constant-factor cost.
-    * This is a RECOMMENDATION, not the auto entry points' default:
-    * the gated q121/q122 run probes=0 because their DuckDB oracles
-    * mirror the exact candidate set, and changing the default would
-    * silently change gated results — callers opt in with
-    * `probes = Similarity.probesFor(nPlanes)`. */
-  def probesFor(nPlanes: Int): Int = {
-    require(nPlanes >= 0, "need nPlanes >= 0")
-    nPlanes / 2
-  }
-
   private[graft] def annBucketKnn(vecs: DataFrame, idCol: String, vecCol: String,
                                   dim: Int, nPlanes: Int, k: Int,
                                   probes: Int = 0, salt: Int = 1): DataFrame = {
@@ -904,79 +861,26 @@ object Similarity {
       .filter(col("qid") =!= col("nid"))
   }
 
-  /** [[semanticClusters]] on the ANN candidate graph — the composition
-    * a 100 TB corpus actually runs: [[mutualAnnPairs]] (bucketed, no
-    * corpus broadcast) labeled by the same CC rounds. */
-  def semanticClustersAnn(vecs: DataFrame, idCol: String, vecCol: String,
-                          dim: Int, nPlanes: Int, k: Int,
-                          iterations: Int = DefaultSemanticIterations,
-                          probes: Int = 0, salt: Int = 1): DataFrame =
-    semanticClustersFromKnn(
-      mutualAnnPairs(vecs, idCol, vecCol, dim, nPlanes, k, probes, salt), iterations)
-
-  /** [[semanticClustersAnn]] with the plane count auto-sized from the
-    * corpus ([[nPlanesFor]]) — the production entry point, closing the
-    * carried-small-corpus-constant failure SCALING.md measures (a
-    * fixed nPlanes=4 grows ~quadratically: 61 s at 30×, vs 9 s
-    * auto-sized). Costs one count() job up front — O(n) scan against
-    * an index build that is already O(n). `probes` is clamped to the
-    * chosen plane count. Small corpora degrade gracefully to the EXACT
-    * graph: n ≤ targetBucket chooses 0 planes = one bucket = all-pairs
-    * candidates, so the result equals the brute [[semanticClusters]]
-    * semantics (the q121 oracle gates exactly this identity).
+  /** Mutual-kNN edges from a candidate frame (qid, nid) — any source's
+    * top-(k+1) neighbours with self dropped: (id_a < id_b) pairs where
+    * EACH endpoint is among the other's candidates (an exact duplicate
+    * outranking self just adds one more edge inside its own cluster).
+    * The mutuality filter is what keeps hub vectors from gluing
+    * unrelated regions together — a one-directional kNN edge through a
+    * hub is NOT enough to merge clusters.
     *
-    * RECALL NOTE — the `probes = 0` default: auto-sizing holds the
-    * candidate COST linear by adding planes as n grows, and each added
-    * plane multiplies a near pair's all-bucket collision probability
-    * by (1−θ/π) — plane growth without probing trades recall for that
-    * linearity. The default stays 0 because the gated oracle mirrors
-    * the exact candidate set; production callers growing past the
-    * small-corpus regime should pass
-    * `probes = Similarity.probesFor(nPlanesFor(n))` (half the planes —
-    * see [[probesFor]] for the recovery-vs-cost arithmetic; ScaleProbe
-    * measures the auto-sized composition at 22–28× under the carried
-    * fixed constant at 100× even before probing). When a persisted
-    * IVF-PQ index with stored vectors already exists (the serving
-    * stack maintains one), prefer
-    * [[VectorIndex.semanticClustersIndexed]]: geometric cells + the
-    * exact-cosine rescore recall the planted near-dup band at 0.999
-    * where this family tops out at 0.82 probing all planes
-    * (RECALL_r17_testdata_sf1.jsonl), reusing candidate
-    * infrastructure clustering otherwise pays for separately. */
-  def semanticClustersAnnAuto(vecs: DataFrame, idCol: String, vecCol: String,
-                              dim: Int, k: Int,
-                              iterations: Int = DefaultSemanticIterations,
-                              targetBucket: Long = 256L,
-                              probes: Int = 0, salt: Int = 1): DataFrame = {
-    val nPlanes = nPlanesFor(vecs.count(), targetBucket)
-    semanticClustersAnn(vecs, idCol, vecCol, dim, nPlanes, k, iterations,
-      math.min(probes, nPlanes), salt)
+    * Scale shape: a lazy lineage cut (the candidates are both sides,
+    * materialized once), then the transpose self-join on the (qid, nid)
+    * pair key — hash-equi on a composite key over the n·(k+1)-row
+    * frame, never a corpus cross join. */
+  private[graft] def mutualPairs(candidates: DataFrame): DataFrame = {
+    val knn = candidates.localCheckpoint(false)
+    knn.as("x").join(knn.as("y"),
+        col("x.qid") === col("y.nid") && col("x.nid") === col("y.qid"))
+      .filter(col("x.qid") < col("x.nid"))
+      .select(col("x.qid").as("id_a"), col("x.nid").as("id_b"))
   }
 
-  /** [[semanticClustersAnnAuto]] with the CC loop run TO THE FIXPOINT
-    * ([[Dedup.duplicateClustersConverged]]) instead of a fixed round
-    * budget — auto-sized planes AND auto-terminated rounds, so the
-    * caller needs to know nothing about the corpus: the plane count
-    * follows n and the barrier count follows the graph's actual
-    * diameter (the gated q121 burns the full 12 rounds so the oracle
-    * can mirror them; production graphs that converge in 6 get the
-    * other 6 barriers back, and pathological ones deeper than 12
-    * still converge instead of silently mislabeling). */
-  def semanticClustersAnnConverged(vecs: DataFrame, idCol: String, vecCol: String,
-                                   dim: Int, k: Int,
-                                   targetBucket: Long = 256L,
-                                   probes: Int = 0, salt: Int = 1): DataFrame = {
-    val nPlanes = nPlanesFor(vecs.count(), targetBucket)
-    Dedup.duplicateClustersConverged(
-      mutualAnnPairs(vecs, idCol, vecCol, dim, nPlanes, k,
-        math.min(probes, nPlanes), salt))
-  }
-
-  /** Semantic clusters: the mutual-kNN graph labeled by connected
-    * components ([[Dedup.duplicateClusters]] — seeded min-label +
-    * pointer doubling). Output (id, cluster) for every vector with at
-    * least one mutual edge; isolated vectors are their own trivial
-    * cluster and are omitted (the q38 convention). */
   /** Default CC rounds for SEMANTIC clustering — deeper than
     * [[Dedup.DefaultClusterIterations]] (5) because mutual-kNN
     * components are chains, not near-dup cliques: the sf0.01/sf0.1
@@ -984,72 +888,49 @@ object Similarity {
     * default caller non-converged labels. 12 is the gate setting. */
   val DefaultSemanticIterations = 12
 
+  /** The one semantic-clustering pipeline every entry point composes: a
+    * candidate frame (qid, nid) → [[mutualPairs]] → the fixed-budget CC
+    * loop [[Dedup.duplicateClusters]]. */
+  private[graft] def semanticClustersFromKnn(candidates: DataFrame,
+                                             iterations: Int = DefaultSemanticIterations): DataFrame =
+    Dedup.duplicateClusters(mutualPairs(candidates), iterations)
+
+  /** Semantic clusters: the mutual-kNN graph labeled by connected
+    * components ([[Dedup.duplicateClusters]] — seeded min-label +
+    * pointer doubling). Output (id, cluster) for every vector with at
+    * least one mutual edge; isolated vectors are their own trivial
+    * cluster and are omitted (the q38 convention). Candidates are the
+    * exact brute kNN ([[knnCandidates]]); topic-balanced curation caps
+    * the labels with `Sampling.capPerKey(labels, "cluster", "id", max)`
+    * (q108). */
   def semanticClusters(vecs: DataFrame, idCol: String, vecCol: String,
                        k: Int, iterations: Int = DefaultSemanticIterations): DataFrame =
-    semanticClustersFromKnn(mutualKnnPairs(vecs, idCol, vecCol, k), iterations)
+    semanticClustersFromKnn(knnCandidates(vecs, idCol, vecCol, k), iterations)
 
-  /** CC labeling over any precomputed mutual-pair frame (id_a, id_b) —
-    * the hook for ANN-candidate graphs at scale. Checkpoints every
-    * round: the cuts are LAZY (no per-round job — blocks materialize
-    * inside the final action), so an uncut round buys nothing and costs
-    * the 3-way re-derivation of its label plan; the r19 A/B at sf0.1
-    * measured every-round cuts at 0.70–0.85× of every-2 and every-4 at
-    * 1.25–1.66× (OPTIMIZATION_r19.md) — labels are identical at any
-    * cut cadence, so this is purely a physical-plan knob. */
-  def semanticClustersFromKnn(pairs: DataFrame,
-                              iterations: Int = DefaultSemanticIterations): DataFrame =
-    Dedup.duplicateClusters(pairs, iterations, checkpointEvery = 1)
+  /** [[semanticClusters]] on the sign-LSH candidate graph
+    * ([[annBucketKnn]]: bucketed, no corpus broadcast) — the composition
+    * a 100 TB corpus runs. Size `nPlanes` with [[nPlanesFor]]; a corpus
+    * that fits one bucket gets 0 planes, whose candidates are the exact
+    * brute set, so the labels equal [[semanticClusters]]'s (spec-gated).
+    * Each plane added as n grows trades recall for linear cost; pass
+    * `probes = probesFor(nPlanes)` to buy it back. When a persisted
+    * IVF-PQ index with stored vectors exists, prefer
+    * [[VectorIndex.semanticClustersIndexed]]: geometric cells plus the
+    * exact-cosine rescore recall the planted near-dup band at 0.999
+    * where this family tops out at 0.82 probing all planes
+    * (RECALL_r17_testdata_sf1.jsonl). */
+  def semanticClustersAnn(vecs: DataFrame, idCol: String, vecCol: String,
+                          dim: Int, nPlanes: Int, k: Int,
+                          iterations: Int = DefaultSemanticIterations,
+                          probes: Int = 0, salt: Int = 1): DataFrame =
+    semanticClustersFromKnn(
+      annBucketKnn(vecs, idCol, vecCol, dim, nPlanes, k, probes, salt), iterations)
 
-  /** Topic-balanced selection: cap any one semantic cluster at
-    * `maxPerCluster` members, chosen by the deterministic id-hash
-    * lottery ([[Sampling.capPerKey]]) — the curation step that stops a
-    * dominant topic from swamping a training mix, composed from the
-    * cluster labeling above. Output (id, cluster) for the kept rows.
-    *
-    * Scale shape: the cluster labels come out of the CC loop behind a
-    * lazy checkpoint, so capPerKey's two references (partial top-k
-    * picks + restoring semi join) materialize the clustering once; the
-    * cap itself is one hash-key shuffle over label-sized rows. */
-  def clusterBalancedSample(vecs: DataFrame, idCol: String, vecCol: String,
-                            k: Int, maxPerCluster: Int,
-                            iterations: Int = DefaultSemanticIterations): DataFrame =
-    Sampling.capPerKey(
-      semanticClusters(vecs, idCol, vecCol, k, iterations),
-      "cluster", "id", maxPerCluster)
-
-  /** [[clusterBalancedSample]] on the ANN scale path: the labels come
-    * from [[semanticClustersAnn]]'s sign-LSH-bucketed candidate graph
-    * (hash-equi bucket self-join — the corpus never broadcasts), then
-    * the same [[Sampling.capPerKey]] id-hash lottery. This is the
-    * topic-balancing composition a 100 TB corpus actually runs;
-    * [[clusterBalancedSample]] stays the exact brute-kNN baseline. */
-  def clusterBalancedSampleAnn(vecs: DataFrame, idCol: String, vecCol: String,
-                               dim: Int, nPlanes: Int, k: Int, maxPerCluster: Int,
-                               iterations: Int = DefaultSemanticIterations,
-                               probes: Int = 0, salt: Int = 1): DataFrame =
-    Sampling.capPerKey(
-      semanticClustersAnn(vecs, idCol, vecCol, dim, nPlanes, k, iterations, probes, salt),
-      "cluster", "id", maxPerCluster)
-
-  /** [[clusterBalancedSampleAnn]] with the plane count auto-sized from
-    * the corpus ([[nPlanesFor]]) — the production entry point for
-    * topic-balanced curation, completing the auto-sizing story
-    * [[semanticClustersAnnAuto]] opened: without it the balanced
-    * sampler still forces callers to carry a plane constant, the exact
-    * failure SCALING.md measures (fixed nPlanes=4 → 5.7× growth for 3×
-    * data at 30×). One count() job up front, `probes` clamped to the
-    * chosen plane count, small corpora degrade to the exact brute
-    * graph (0 planes = one bucket) like the clustering form. */
-  def clusterBalancedSampleAnnAuto(vecs: DataFrame, idCol: String, vecCol: String,
-                                   dim: Int, k: Int, maxPerCluster: Int,
-                                   iterations: Int = DefaultSemanticIterations,
-                                   targetBucket: Long = 256L,
-                                   probes: Int = 0, salt: Int = 1): DataFrame = {
-    val nPlanes = nPlanesFor(vecs.count(), targetBucket)
-    clusterBalancedSampleAnn(vecs, idCol, vecCol, dim, nPlanes, k, maxPerCluster,
-      iterations, math.min(probes, nPlanes), salt)
-  }
-
+  /** ANN via sign-LSH: queries only compare against corpus rows in the same
+    * bucket — the scale path for similarity search (candidate set shrinks
+    * ~2^nPlanes-fold; bucket join is a hash join on the bucket id instead
+    * of a cross join). Recall is traded for throughput; the brute-force
+    * `knnJoin` stays the exact baseline. */
   def annLshJoin(queries: DataFrame, qIdCol: String, qVecCol: String,
                  corpus: DataFrame, cIdCol: String, cVecCol: String,
                  dim: Int, nPlanes: Int, k: Int): DataFrame = {

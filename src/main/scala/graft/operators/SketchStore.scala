@@ -140,7 +140,7 @@ object SketchStore {
     * batch partial — ≤ depth·width rows per batch in, ≤ depth·width out. */
   def cmsGrid(spark: SparkSession, path: String): DataFrame = {
     requireConf(spark, path)
-    spark.read.parquet(s"$path/cells")
+    SidecarIO.readTable(spark, s"$path/cells")
       .groupBy("row", "bucket").agg(sum(col("cnt")).as("cnt"))
   }
 
@@ -202,7 +202,7 @@ object SketchStore {
     requireConf(spark, path)
     val p = hllConf(spark, path)
     Sketch.hllEstimateFrom(
-      spark.read.parquet(s"$path/cells")
+      SidecarIO.readTable(spark, s"$path/cells")
         .groupBy(col("group"), col("bucket")).agg(max(col("maxrho")).as("maxrho")),
       "group", p)
   }

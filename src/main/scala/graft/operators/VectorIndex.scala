@@ -61,11 +61,19 @@ object VectorIndex {
                  nCells: Int, m: Int, nCentsPq: Int, path: String,
                  storeVectors: Boolean = false,
                  residual: Boolean = false): Unit = {
+    // the first-k centroids are the rows with ids 0..nCells-1: none
+    // means an empty corpus (or one whose ids skip them), refused here
+    // before the codebook split indexes into an empty array
+    def centroidRows(cs: Array[(Long, Array[Double])]) = {
+      require(cs.nonEmpty, s"writeIvfPq($path): the corpus has no row with an id " +
+        s"below nCells = $nCells (is it empty?) — an index needs its first-k centroid rows")
+      cs
+    }
     val (cents, books) =
       if (residual) {
         // residual books need the centroid bank in-plan, so their
         // collect stays a second job; the raw frame merges both below
-        val cs = Similarity.collectCentroids(corpus, cIdCol, cVecCol, nCells)
+        val cs = centroidRows(Similarity.collectCentroids(corpus, cIdCol, cVecCol, nCells))
         (cs, Similarity.subBooks(
           Similarity.residualBookRows(corpus, cIdCol, cVecCol, cs, nCentsPq), m))
       } else {
@@ -73,7 +81,7 @@ object VectorIndex {
         // two jobs per build, and the suite builds ~20 indexes per pass)
         val (cs, book) = Similarity.collectQuantizers(
           corpus, cIdCol, cVecCol, nCells, nCentsPq)
-        (cs, Similarity.subBooks(book, m))
+        (centroidRows(cs), Similarity.subBooks(book, m))
       }
     writeWith(corpus, cIdCol, cVecCol, cents, books, path, storeVectors, residual)
   }
@@ -765,11 +773,13 @@ object VectorIndex {
     * auto-sized sign-LSH recall gap (RECALL probes: the hyperplane
     * family holds cost linear but recalls 0.17 on the mid-cosine band
     * that carries this corpus's true-kNN mass; the IVF geometry +
-    * exact rescore recalls it all at the same candidate bound). The
-    * mutual transpose join and CC labeling are exactly
-    * [[Similarity.mutualKnnPairs]]/[[Similarity.semanticClustersFromKnn]]'s;
-    * only the candidate pass changes — so when the proposal covers the
-    * true top-(k+1), output is BIT-IDENTICAL to the exact
+    * exact rescore recalls it all at the same candidate bound). It is
+    * [[Similarity.semanticClustersFromKnn]] — the mutual transpose join
+    * and CC rounds of [[Similarity.semanticClusters]] and
+    * [[Similarity.semanticClustersAnn]] — over the
+    * [[selfKnnCandidates]] source; only the candidate pass differs, so
+    * when the proposal covers the true top-(k+1), output is
+    * BIT-IDENTICAL to the exact
     * [[Similarity.semanticClusters]] (the q161 gate pins this against
     * the exact-cluster oracle at gate scale). Scale shape: one
     * cell-key exchange + candidate-sized rescore, reusing an index the
@@ -788,15 +798,9 @@ object VectorIndex {
   def semanticClustersIndexed(spark: SparkSession, idx: Loaded,
                               nProbe: Int = AutoNProbe, k: Int,
                               iterations: Int = Similarity.DefaultSemanticIterations,
-                              overfetch: Int = 4): DataFrame = {
-    val knn = selfKnnCandidates(spark, idx, nProbe, k, overfetch)
-      .localCheckpoint(false)
-    val mutual = knn.as("x").join(knn.as("y"),
-        col("x.qid") === col("y.nid") && col("x.nid") === col("y.qid"))
-      .filter(col("x.qid") < col("x.nid"))
-      .select(col("x.qid").as("id_a"), col("x.nid").as("id_b"))
-    Similarity.semanticClustersFromKnn(mutual, iterations)
-  }
+                              overfetch: Int = 4): DataFrame =
+    Similarity.semanticClustersFromKnn(
+      selfKnnCandidates(spark, idx, nProbe, k, overfetch), iterations)
 
   private def adcSearch(spark: SparkSession, queries: DataFrame,
                         qIdCol: String, qVecCol: String, idx: Loaded,

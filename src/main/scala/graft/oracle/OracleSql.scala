@@ -751,10 +751,6 @@ l0 AS MATERIALIZED (SELECT DISTINCT s AS id, s AS cluster FROM edges),
 $rounds"""
   }
 
-  /** q108: cluster-balanced selection ([[graft.operators.Similarity
-    * .clusterBalancedSample]]) — the q107 labels capped at `maxN` per
-    * cluster by the q57b id-hash window (hash ASC, id ASC), hash taken
-    * over the member id. */
   /** q116: semantic clusters on the ANN candidate graph
     * ([[graft.operators.Similarity.semanticClustersAnn]]) — the q107
     * chain with candidates restricted to sign-LSH bucket mates
@@ -765,9 +761,10 @@ $rounds"""
     s"""${semanticClusterAnnCtes(dim, nPlanes, k, iterations)}
 SELECT id, cluster FROM l$iterations"""
 
-  /** q119: [[graft.operators.Similarity.clusterBalancedSampleAnn]] —
-    * the q108 id-hash-lottery cap over the q116 ANN cluster labels:
-    * the topic-balancing composition on the scale path. */
+  /** q119: `Sampling.capPerKey` over
+    * [[graft.operators.Similarity.semanticClustersAnn]] — the q108
+    * id-hash-lottery cap over the q116 ANN cluster labels: the
+    * topic-balancing composition on the scale path. */
   def q119_cluster_balanced_ann(dim: Int, nPlanes: Int, k: Int,
                                 iterations: Int, maxN: Int): String =
     s"""${semanticClusterAnnCtes(dim, nPlanes, k, iterations)},
@@ -818,6 +815,10 @@ l0 AS MATERIALIZED (SELECT DISTINCT s AS id, s AS cluster FROM edges),
 $rounds"""
   }
 
+  /** q108: cluster-balanced selection (`Sampling.capPerKey` over
+    * [[graft.operators.Similarity.semanticClusters]]) — the q107 labels
+    * capped at `maxN` per cluster by the q57b id-hash window (hash ASC,
+    * id ASC), hash taken over the member id. */
   def q108_cluster_balanced(k: Int, iterations: Int, maxN: Int): String =
     s"""${semanticClusterCtes(k, iterations)},
 hh AS (SELECT cluster, id, ((((id % $M + $M) % $M) * $A2 + $C2) % $M) AS hv FROM l$iterations),

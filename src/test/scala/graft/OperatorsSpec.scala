@@ -390,10 +390,10 @@ class OperatorsSpec extends AnyFunSuite with SparkSessionTestWrapper {
     // bit length doubled per cut, so ~31+ cuts threw "BigInteger would
     // overflow supported range" (and giant-BigInt stats arithmetic
     // dominated rounds well before). The fix stamps each cut with the
-    // constant edge size. 40 rounds at checkpointEvery=1 is past the
-    // old overflow point; labels must equal the 6-round fixpoint.
+    // constant edge size. 40 rounds (one cut each) is past the old
+    // overflow point; labels must equal the 6-round fixpoint.
     val chain = (0L until 20L).map(i => (i, i + 1L)).toDF("id_a", "id_b")
-    val deep = Dedup.duplicateClusters(chain, iterations = 40, checkpointEvery = 1)
+    val deep = Dedup.duplicateClusters(chain, iterations = 40)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(deep.size == 21 && deep.values.forall(_ == 0L))
     val stamped = Dedup.duplicateClusters(chain, iterations = 6)
@@ -453,25 +453,6 @@ class OperatorsSpec extends AnyFunSuite with SparkSessionTestWrapper {
     val xs = Seq(0L, 1L << 20, 1L << 25, 1L << 30, 1L << 35, 1L << 40)
       .map(initialPartitionsFor(_, 32))
     assert(xs == xs.sorted)
-  }
-
-  test("duplicateClustersConverged: fixpoint equals a sufficient fixed budget; early exit is invisible") {
-    import spark.implicits._
-    // the 34-node chain that EXCEEDS the default 5-round budget: the
-    // converged form must keep going past it and land on the 6-round
-    // (sufficient) labels without being told the diameter
-    val over = (0L until 33L).map(i => (i, i + 1L)).toDF("id_a", "id_b")
-    val conv = Dedup.duplicateClustersConverged(over)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val fixed6 = Dedup.duplicateClusters(over, iterations = 6)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(conv == fixed6 && conv.values.forall(_ == 0L))
-    // a clique graph converges in round 1; the early exit must return
-    // the same labels as any larger budget (fixpoint is unique)
-    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L)).toDF("id_a", "id_b")
-    val convSmall = Dedup.duplicateClustersConverged(pairs, checkEvery = 1)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(convSmall == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 10L -> 10L, 11L -> 10L))
   }
 
   test("minhash near-dups finds a true near-duplicate pair") {

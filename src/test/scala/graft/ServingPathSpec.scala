@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import graft.operators.{FullText, FullTextIndex, SidecarIO, VectorIndex}
+import graft.operators.{DedupIndex, FullText, FullTextIndex, SidecarIO, SketchStore, VectorIndex}
 
 /** The index serving path without metadata jobs: every index table's
   * footer schema equals Spark's inferred one, a hybrid search over a
@@ -85,6 +85,23 @@ class ServingPathSpec extends AnyFunSuite with SparkSessionTestWrapper {
     Seq("postings", "docs", "df", "meta", "tombstones").foreach(t => assertParity(s"$p/$t"))
   }
 
+  test("footer schema == inferred schema for the sketch store's cells table") {
+    val cms = tmp("graft_serve_cms")
+    SketchStore.writeCms(d.filter(col("doc_id") < 250), "text", 3, 16, cms)
+    SketchStore.appendCms(d.filter(col("doc_id") >= 250), "text", cms)
+    val hll = tmp("graft_serve_hll")
+    val sh = SketchStore.shingleRows(d.withColumn("g", col("doc_id") % 3), "g", "text", n = 3)
+    SketchStore.writeHll(sh, "g", "shingle", p = 6, path = hll)
+    Seq(s"$cms/cells", s"$hll/cells").foreach(assertParity)
+    // a streamed batch label is not an integral partition value: the
+    // read falls back to inference, and the estimates read the same
+    val before = rows(SketchStore.cmsGrid(spark, cms))
+    SketchStore.appendCmsBatch(d.filter(lit(false)), "text", cms,
+      SketchStore.streamLabel("spec", 0L))
+    assert(SidecarIO.footerSchema(spark, s"$cms/cells").isEmpty)
+    assert(rows(SketchStore.cmsGrid(spark, cms)) == before)
+  }
+
   test("no footer schema falls back to inference: empty table, driver-written sidecar") {
     val empty = tmp("graft_serve_empty")
     assert(SidecarIO.footerSchema(spark, empty).isEmpty)
@@ -141,6 +158,19 @@ class ServingPathSpec extends AnyFunSuite with SparkSessionTestWrapper {
     val got = fused.select("qid", "id").collect()
     assert(got.length == 4 * 5)
     assert(!got.exists(_.getLong(1) == 5L))
+  }
+
+  test("job budget: DedupIndex reads catalog tables without a schema job") {
+    DedupIndex.writeMinhash(d.filter(col("doc_id") < 400), "doc_id", "text",
+      table = "graft_serve_didx")
+    val batch = d.filter(col("doc_id") >= 400)
+    var found: DataFrame = null
+    val jobs = jobsLaunchedBy {
+      found = DedupIndex.nearDupsAgainst(spark, batch, "doc_id", "text",
+        "graft_serve_didx", threshold = 0.3)
+    }
+    assert(jobs == 0, s"$jobs jobs launched before the action")
+    assert(found.columns.toSeq == Seq("doc_id", "corpus_id", "est_jaccard"))
   }
 
   test("empty query batch: every leg returns no rows") {

@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.functions.{K, Kernel, TopKAgg}
-import graft.operators.Similarity
+import graft.operators.{Sampling, Similarity, VectorIndex}
 
 /** TopKAgg vs the window formulation it replaced, plus the plan-shape
   * guarantees (partial aggregation, no Window/full-product exchange). */
@@ -14,7 +14,7 @@ class SimilaritySpec extends AnyFunSuite with SparkSessionTestWrapper {
 
   test("mutualKnnPairs: every edge is mutual; one-directional hub edges are cut") {
     val k = 3
-    val pairs = Similarity.mutualKnnPairs(e, "vec_id", "embedding", k)
+    val pairs = Similarity.mutualPairs(Similarity.knnCandidates(e, "vec_id", "embedding", k))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs.nonEmpty)
     assert(pairs.forall { case (a, b) => a < b })
@@ -30,9 +30,9 @@ class SimilaritySpec extends AnyFunSuite with SparkSessionTestWrapper {
   }
 
   test("semanticClusters: labels are a CC fixpoint (edge endpoints share labels)") {
-    val pairs = Similarity.mutualKnnPairs(e, "vec_id", "embedding", 3)
+    val pairs = Similarity.mutualPairs(Similarity.knnCandidates(e, "vec_id", "embedding", 3))
       .localCheckpoint()
-    val labels = Similarity.semanticClustersFromKnn(pairs, iterations = 20)
+    val labels = Similarity.semanticClusters(e, "vec_id", "embedding", 3, iterations = 20)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val ps = pairs.collect().map(r => (r.getLong(0), r.getLong(1)))
     ps.foreach { case (a, b) =>
@@ -44,8 +44,9 @@ class SimilaritySpec extends AnyFunSuite with SparkSessionTestWrapper {
 
   test("clusterBalancedSample: ≤ maxN per cluster, lowest id-hash first") {
     val maxN = 2
-    val kept = Similarity.clusterBalancedSample(e, "vec_id", "embedding", 3, maxN,
-        iterations = 20)
+    val kept = Sampling.capPerKey(
+        Similarity.semanticClusters(e, "vec_id", "embedding", 3, iterations = 20),
+        "cluster", "id", maxN)
       .select(col("id"), col("cluster"))
       .collect().map(r => r.getLong(0) -> r.getLong(1))
     val labels = Similarity.semanticClusters(e, "vec_id", "embedding", 3, iterations = 20)
@@ -285,30 +286,9 @@ class SimilaritySpec extends AnyFunSuite with SparkSessionTestWrapper {
     for (p <- 0 to 62) assert(probesFor(p) <= p, s"probes must fit annBucketKnn's [0, nPlanes] bound at $p")
     val xs = (0 to 62).map(probesFor)
     assert(xs == xs.sorted, "probe budget must not shrink as planes grow")
-    // and the recommendation composes with the auto entry point: the
-    // result stays a valid clustering (same id domain as probes = 0 on
-    // a one-bucket corpus, where probing is a no-op by clamping)
-    val small = e.filter(col("vec_id") < 200)
-    val n = small.count()
-    assert(Similarity.nPlanesFor(n) == 0)
-    val withRec = Similarity.semanticClustersAnnAuto(small, "vec_id", "embedding",
-      K.Dim, k = 3, iterations = 8, probes = probesFor(Similarity.nPlanesFor(n)))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val without = Similarity.semanticClustersAnnAuto(small, "vec_id", "embedding",
-      K.Dim, k = 3, iterations = 8)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(withRec == without)
   }
 
-  test("semanticClustersAnnAuto: auto == explicit nPlanesFor params; 0 planes == brute graph") {
-    val n = e.count()
-    val auto = Similarity.semanticClustersAnnAuto(e, "vec_id", "embedding",
-      K.Dim, k = 3, iterations = 8)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val explicitP = Similarity.semanticClustersAnn(e, "vec_id", "embedding",
-      K.Dim, Similarity.nPlanesFor(n), k = 3, iterations = 8)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(auto == explicitP)
+  test("semanticClustersAnn: 0 planes == brute graph, edges and labels") {
     // a corpus that fits one bucket (n <= 256 -> 0 planes): the 0-plane
     // ANN candidate edges must be the full brute top-k relation
     val small = e.filter(col("vec_id") < 200)
@@ -320,35 +300,14 @@ class SimilaritySpec extends AnyFunSuite with SparkSessionTestWrapper {
       .filter(col("qid") =!= col("vec_id"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(annEdges == brute)
-  }
-
-  test("semanticClustersAnnConverged: fixpoint labels == the fixed 12-round gate labels") {
-    // 12 rounds is past this graph's fixpoint, so the converged form —
-    // which stops as soon as two checks agree — must produce identical
-    // labels while spending fewer barriers.
-    val conv = Similarity.semanticClustersAnnConverged(e, "vec_id", "embedding",
-      K.Dim, k = 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val fixed = Similarity.semanticClustersAnnAuto(e, "vec_id", "embedding",
-      K.Dim, k = 3, iterations = 12)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(conv.nonEmpty)
-    assert(conv == fixed)
-  }
-
-  test("clusterBalancedSampleAnnAuto: auto == explicit nPlanesFor params") {
-    val n = e.count()
-    val auto = Similarity.clusterBalancedSampleAnnAuto(e, "vec_id", "embedding",
-      K.Dim, k = 3, maxPerCluster = 4, iterations = 8)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val explicitP = Similarity.clusterBalancedSampleAnn(e, "vec_id", "embedding",
-      K.Dim, Similarity.nPlanesFor(n), k = 3, maxPerCluster = 4, iterations = 8)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(auto.nonEmpty)
-    assert(auto == explicitP)
-    // the cap binds: no cluster keeps more than maxPerCluster members
-    val perCluster = auto.groupBy(_._2).values.map(_.size)
-    assert(perCluster.max <= 4)
+    // and so the one pipeline labels both sources identically
+    def labels(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val annLabels = labels(Similarity.semanticClustersAnn(small, "vec_id", "embedding",
+      K.Dim, nPlanes = 0, k = 3, iterations = 8))
+    assert(annLabels.nonEmpty)
+    assert(annLabels == labels(Similarity.semanticClusters(small, "vec_id", "embedding",
+      3, iterations = 8)))
   }
 
   test("annBucketKnn salt-invariance at 10x scale (testdata_sf1, skew-relevant buckets)") {
@@ -367,5 +326,51 @@ class SimilaritySpec extends AnyFunSuite with SparkSessionTestWrapper {
     val salted = edges(4)
     assert(plain.nonEmpty)
     assert(plain == salted, "salt must stay a pure parallelism knob at scale")
+  }
+
+  test("degenerate inputs: empty, single vector and k >= n, every source") {
+    type Labels = Either[IllegalArgumentException, Map[Long, Long]]
+    def run(labels: => org.apache.spark.sql.DataFrame): Labels =
+      try Right(labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
+      catch { case ex: IllegalArgumentException => Left(ex) }
+    def indexed(df: org.apache.spark.sql.DataFrame, k: Int) = {
+      val path = java.nio.file.Files.createTempDirectory("graft_sim_degenerate").toString
+      VectorIndex.writeIvfPq(df, "vec_id", "embedding", nCells = 2, m = 8, nCentsPq = 16,
+        path = path, storeVectors = true)
+      VectorIndex.semanticClustersIndexed(spark, VectorIndex.load(spark, path),
+        nProbe = 2, k = k, iterations = 8, overfetch = 8)
+    }
+    val sources = Seq[(String, (org.apache.spark.sql.DataFrame, Int) => Labels)](
+      "brute" -> ((df, k) => run(Similarity.semanticClusters(df, "vec_id", "embedding", k, 8))),
+      "bucket0" -> ((df, k) => run(Similarity.semanticClustersAnn(df, "vec_id", "embedding",
+        K.Dim, nPlanes = 0, k = k, iterations = 8))),
+      "bucket4" -> ((df, k) => run(Similarity.semanticClustersAnn(df, "vec_id", "embedding",
+        K.Dim, nPlanes = 4, k = k, iterations = 8))),
+      "indexed" -> ((df, k) => run(indexed(df, k))))
+    val five = e.filter(col("vec_id") < 5)
+    val inputs = Seq(
+      ("empty", e.filter(lit(false)), 3, Set.empty[Long]),
+      ("single", e.filter(col("vec_id") === 0), 3, Set(0L)),
+      ("k >= n", five, 8, (0L until 5L).toSet))
+    for ((input, df, k, ids) <- inputs; (source, cluster) <- sources) {
+      val what = s"$source on $input"
+      cluster(df, k) match {
+        case Right(labels) =>
+          // a labeling: known ids, each cluster named by its min member
+          assert(labels.keySet.subsetOf(ids), what)
+          labels.groupBy(_._2).foreach { case (c, members) =>
+            assert(members.keys.min == c, s"$what: cluster $c not labeled by its min id") }
+          // no mutual edge below two vectors; every exact source joins all
+          // of a corpus no larger than k into one cluster
+          if (ids.size < 2) assert(labels.isEmpty, what)
+          if (input == "k >= n" && source != "bucket4")
+            assert(labels == ids.map(_ -> 0L).toMap, what)
+        case Left(ex) =>
+          // only an index build may refuse, and only a corpus too small
+          // to hold its first-k quantizers — naming the corpus
+          assert(source == "indexed" && ids.size < 2 && ex.getMessage.contains("corpus"),
+            s"$what: ${ex.getMessage}")
+      }
+    }
   }
 }
